@@ -61,16 +61,7 @@ object Bench {
     // shuffle partitions track the thread count, not Spark's default 200
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fresh warehouse per run (see Verify) — table-writing queries
-      // must not trip over a previous JVM's managed-table directories
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
+    val spark = Session.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
@@ -84,7 +75,6 @@ object Bench {
     // Janino/codegen compiler, broadcast + shuffle join paths, window
     // exec, and the custom expression kernels.
     Tables.register(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
     materialize(spark.sql("""
       SELECT o.o_orderstatus, COUNT(*) n,
              SUM(l.l_quantity) sq,

@@ -24,8 +24,12 @@ object Tables {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
 
+  /** Per-session setup every harness query runs first: the views above
+    * plus the graft SQL functions (`GraftFunctions.register`), so a
+    * query needs no registration of its own. Memoized per session. */
   def register(spark: SparkSession, sfDir: String): Unit = {
     if (registered.get(spark) == sfDir) return
+    graft.functions.GraftFunctions.register(spark)
     // events.ts precision varies across testdata generations: TIMESTAMP
     // (NANOS) (read as a nanos long under the legacy flag, floor-divided
     // to µs — integer div, double division would lose precision above

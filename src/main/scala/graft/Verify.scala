@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -22,12 +21,7 @@ object Verify {
     // constraint never bites).
     val wh = Files.createTempDirectory("graft-wh").toString
     System.setProperty("derby.stream.error.file", s"$wh/derby.log")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh)
+    val spark = Session.builder(cpus.toInt, wh)
       .config("spark.hadoop.javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$wh/metastore_db;create=true")
       .enableHiveSupport()

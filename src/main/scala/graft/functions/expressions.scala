@@ -1462,12 +1462,24 @@ object GraftFunctions {
     Bridge.column(VecSumAgg(Bridge.expression(c)).toAggregateExpression())
 
   private def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+  /** Optional 4th argument of the ngrams aggregates: the buffer bound
+    * (Hive's precision factor). */
+  private def bufArg(es: Seq[Expression]): Int =
+    if (es.length >= 4) intArg(es(3)) else 20000
+  /** `context_ngrams`' context: a foldable array literal (as in Hive);
+    * NULL elements are the wildcard positions. */
+  private def contextArg(e: Expression): Seq[Option[String]] = {
+    val a = e.eval().asInstanceOf[ArrayData]
+    (0 until a.numElements()).map { i =>
+      if (a.isNullAt(i)) None else Some(a.getUTF8String(i).toString)
+    }
+  }
 
-  /** Name → SQL builder for every graft-registered scalar/aggregate/
-    * generator function — the single source of truth: register() walks
-    * it, and FunctionParitySpec's exercise guard walks it too, so a
-    * function added here without a passing smoke query fails the build
-    * (round-4 lesson: vec_sum shipped registered but unverified). */
+  /** Name → SQL builder for every graft function — the single source of
+    * truth: register() walks it, GraftExtensions injects it, and
+    * FunctionParitySpec's exercise guard walks it too, so a function
+    * added here without a passing smoke query fails the build (round-4
+    * lesson: vec_sum shipped registered but unverified). */
   val builders: Map[String, Seq[Expression] => Expression] = Map[String, Seq[Expression] => Expression](
     "cosine_sim" -> (es => CosineSim(es(0), es(1))),
     "cosine_sim_d" -> (es => CosineSimD(es(0), es(1))),
@@ -1494,6 +1506,9 @@ object GraftFunctions {
     "cm_query" -> (es => CmQuery(es(0), es(1))),
     "bloom_filter" -> (es => BloomFilterAgg(es(0), intArg(es(1)), intArg(es(2)))),
     "in_bloom_filter" -> (es => InBloomFilter(es(0), es(1))),
+    // Hive's ngrams / context_ngrams (tokens, n | context, k [, maxBuf])
+    "ngrams_topk" -> (es => NGramsTopKAgg(es.head, intArg(es(1)), intArg(es(2)), bufArg(es))),
+    "context_ngrams" -> (es => ContextNGramsAgg(es.head, contextArg(es(1)), intArg(es(2)), bufArg(es))),
     // Hive bitmap-index family (EWAH codec; previously skip-pinned)
     "ewah_bitmap" -> (es => EwahBitmapAgg(es.head)),
     "ewah_bitmap_and" -> (es => EwahBitmapAnd(es(0), es(1))),
@@ -1502,11 +1517,15 @@ object GraftFunctions {
     "ewah_bitmap_count" -> (es => EwahBitmapCount(es.head))
   ) ++ Hive2x.builders // [2.x] tail: mask_* family, sort_array_by, replicate_rows
 
-  /** Make the functions usable from spark.sql text too. */
+  /** Make the functions usable from spark.sql text too. Idempotent: a
+    * name already bound to its builder (injected by GraftExtensions, or
+    * by an earlier call) is left as it is. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.lookupFunctionBuilder(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)).contains(b))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 }

@@ -363,7 +363,6 @@ object Clustering {
                           k: Int, iters: Int,
                           corpusPred: Column): Seq[(Int, Array[Double])] = {
     Tables.register(spark, sfDir)
-    GraftFunctions.register(spark)
     val q = quantized(spark.table("embeddings")).where(corpusPred).persist()
     try {
       // hold expected cluster size at TargetCluster as the corpus

@@ -76,12 +76,6 @@ object Dedup {
 
   private type Q = (SparkSession, String) => DataFrame
 
-  private def gsql(q: String): Q = (spark, sfDir) => {
-    Tables.register(spark, sfDir)
-    GraftFunctions.register(spark)
-    spark.sql(Tables.scaleHints(spark, q))
-  }
-
   /** The minhash+LSH near-duplicate pair SQL WITHOUT the final global
     * sort — shared by dedup_minhash_lsh (which adds ORDER BY for the
     * oracle compare) and dedup_clusters (whose symmetric-edge union
@@ -271,7 +265,7 @@ object Dedup {
     // pair-set equality (recall exactly 1.0) against brute force at both
     // sf0.001 and sf0.01, so a testdata change that breaks the oracle
     // assumption fails with a clear message.
-    "dedup_minhash_lsh" -> gsql(MinhashPairsSql + "\n      ORDER BY doc_a, doc_b"),
+    "dedup_minhash_lsh" -> Tables.sql(MinhashPairsSql + "\n      ORDER BY doc_a, doc_b"),
 
     // SimHash: 64-bit fingerprint; candidates share one of SEVEN bands
     // (six 9-bit + one 10-bit). Pigeonhole: a pair at hamming ≤ 6 flips
@@ -294,7 +288,7 @@ object Dedup {
     // band count/width is the scale knob, documented here. Exact hamming
     // on candidates via bit_count(xor); the only shuffle is the
     // (band, key) equi-join.
-    "dedup_simhash" -> gsql("""
+    "dedup_simhash" -> Tables.sql("""
       WITH sh AS (
         SELECT doc_id, SIMHASH64(toks) AS sim
         FROM (SELECT doc_id, TOKENIZE(text) AS toks
@@ -347,7 +341,6 @@ object Dedup {
     // replicates it verbatim.
     "dedup_substring" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       // persist the (doc_id, window-hash) table: it feeds the hot-window
       // aggregate AND both self-join sides — inlined (Spark CTEs don't
       // materialize), the tokenize+shingle+MD5 kernel would run 3× over
@@ -368,7 +361,7 @@ object Dedup {
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
-    "dedup_ngram_jaccard" -> gsql(s"""
+    "dedup_ngram_jaccard" -> Tables.sql(s"""
       WITH $NgramJpairsCtes
       SELECT doc_a, doc_b, jaccard FROM jpairs
       ORDER BY doc_a, doc_b"""),
@@ -383,7 +376,7 @@ object Dedup {
     // At 100 TB the quadratic-in-length DP runs only on the tiny
     // verified-candidate set, each pair independent (narrow map work
     // after one ids-only join back to the texts).
-    "dedup_edit_verify" -> gsql(s"""
+    "dedup_edit_verify" -> Tables.sql(s"""
       WITH $NgramJpairsCtes
       SELECT p.doc_a, p.doc_b, p.jaccard,
              LEVENSHTEIN(da.text, db.text) AS edit_dist,
@@ -403,7 +396,7 @@ object Dedup {
     // inverted index of potential containers — recall 1.0 for either
     // direction ≥ τ, never all-pairs. Same source blocking + df-ranked
     // prefix as dedup_ngram_jaccard.
-    "dedup_containment" -> gsql("""
+    "dedup_containment" -> Tables.sql("""
       WITH sh AS (
         SELECT doc_id, source, SHINGLE_SET(text, 3) AS grams
         FROM (SELECT /*+ REPARTITION(32) */ doc_id, source, text FROM documents)
@@ -465,7 +458,7 @@ object Dedup {
     // 2-row result is not a row-scale collect). Oracle chains the
     // independent DuckDB formulations end to end.
     "pipeline_dedup_report" -> ((spark, sfDir) => {
-      val pairsAll = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairsAll = Tables.sql(MinhashPairsSql)(spark, sfDir)
       val d = spark.sql(
         """SELECT doc_id, MD5(CAST(text AS BINARY)) AS h,
                   CAST(SIZE(TOKENIZE(text)) AS BIGINT) AS ntok
@@ -525,7 +518,7 @@ object Dedup {
     // keep rule u·csize < 2^32 — pure integer compare, exact in both
     // engines. Per-csize keep counts report the realized thinning.
     "curation_dedup_aware_sample" -> ((spark, sfDir) => {
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = connectedComponents(spark, pairs)
       val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("csize"))
@@ -550,7 +543,7 @@ object Dedup {
     // all = corpus minus CC nodes — pair-graph components are always
     // size ≥ 2). Same CC machinery, one extra aggregate.
     "dedup_cluster_stats" -> ((spark, sfDir) => {
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = connectedComponents(spark, pairs)
       val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("csize"))
@@ -576,7 +569,7 @@ object Dedup {
     "dedup_clusters" -> ((spark, sfDir) => {
       // the UNSORTED pair set — the symmetric-edge canonicalization would
       // discard dedup_minhash_lsh's final ORDER BY range exchange unused
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = connectedComponents(spark, pairs)
       val sizes = labels.groupBy("comp").agg(count(lit(1)).as("csize"))
@@ -594,7 +587,7 @@ object Dedup {
     // One window over cluster-partitioned rows — no new shuffle class.
     "dedup_keep_best" -> ((spark, sfDir) => {
       import org.apache.spark.sql.expressions.Window
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val (labels, _) = connectedComponents(spark, pairs)
       val q = spark.sql("""
@@ -622,11 +615,10 @@ object Dedup {
     // end-to-end against an independent DuckDB formulation.
     "pipeline_curate" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       // components directly over the pair graph — dedup_clusters' final
       // cluster-size join and ORDER BY serve its own output contract and
       // would be dead weight under this anti-join consumer
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val nonRep = connectedComponents(spark, pairs)._1
         .where(col("node") =!= col("comp"))
@@ -670,8 +662,7 @@ object Dedup {
     // levels with the same integer-exact criterion.
     "pipeline_curate_ppl" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
-      val pairs = gsql(MinhashPairsSql)(spark, sfDir)
+      val pairs = Tables.sql(MinhashPairsSql)(spark, sfDir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val nonRep = connectedComponents(spark, pairs)._1
         .where(col("node") =!= col("comp"))
@@ -738,7 +729,6 @@ object Dedup {
     // W, same cosine calls, oracle text unchanged.
     "dedup_embedding_cosine" -> ((spark, sfDir) => {
       Tables.register(spark, sfDir)
-      GraftFunctions.register(spark)
       val blocks = spark.table("embeddings")
         .groupBy(col("label")).agg(count(lit(1)).as("n"))
         .collect()

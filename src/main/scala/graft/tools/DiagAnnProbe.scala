@@ -10,7 +10,7 @@ package graft.tools
 object DiagAnnProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = ToolSession.local()
+    val spark = graft.Session.local()
     args.drop(1).headOption.foreach(p => spark.conf.set("graft.ann.lshPlanes", p))
     def time(what: String)(f: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -39,7 +39,6 @@ object DiagAnnProbe {
     // batch form hits all 64 files by pigeonhole; the SINGLE-probe
     // serving case is where the driver-side file pruning binds
     graft.Tables.register(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
     val (dir, tables, planes) = graft.operators.Similarity.lshIndexFixture(spark, sfDir)
     import org.apache.spark.sql.functions._
     val n = spark.table("embeddings").count()

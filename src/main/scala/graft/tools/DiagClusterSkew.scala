@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 object DiagClusterSkew {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = ToolSession.local()
+    val spark = graft.Session.local()
     graft.Tables.register(spark, sfDir)
     val cents = graft.operators.Clustering.kmeansCentroids(spark, sfDir)
     println(s"[diag] kEff=${cents.size}")

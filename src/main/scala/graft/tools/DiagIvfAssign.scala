@@ -17,7 +17,7 @@ object DiagIvfAssign {
     val sfDir = args(0)
     val k = args.lift(1).map(_.toInt).getOrElse(1024)
     val mode = args.lift(2).getOrElse("both")
-    val spark = ToolSession.local()
+    val spark = graft.Session.local()
     graft.Tables.register(spark, sfDir)
     // r14: the sf10 embeddings fixture is ONE 7.6 MB parquet file → 1
     // input partition, so every earlier Diag number was a 1-core

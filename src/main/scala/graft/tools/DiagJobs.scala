@@ -17,7 +17,7 @@ object DiagJobs {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = ToolSession.local(cores)
+    val spark = graft.Session.local(cores)
     final case class J(var start: Long = 0L, var end: Long = 0L,
                        var tasks: Int = 0, var desc: String = "")
     val jobs = mutable.LinkedHashMap.empty[Int, J]

@@ -7,7 +7,7 @@ package graft.tools
 object DiagLshKnob {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = ToolSession.local()
+    val spark = graft.Session.local()
     args.drop(1).foreach { tp =>
       val Array(t, p) = tp.split(':')
       spark.conf.set("graft.ann.lshTables", t)

@@ -16,10 +16,9 @@ object DiagMigrate {
     // default to the machine: the migration is 64 independent per-file
     // tasks — measuring it on 4 cores serializes them into 16 waves and
     // understates exactly the property under test
-    val spark = ToolSession.local(args.lift(1).map(_.toInt)
+    val spark = graft.Session.local(args.lift(1).map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors))
     graft.Tables.register(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
     import graft.operators.Similarity
     import graft.sources.HiveBucketedIO
     val wh = spark.conf.get("spark.sql.warehouse.dir")

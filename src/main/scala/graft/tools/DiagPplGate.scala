@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev diagnostic: stage-by-stage row counts for the curation funnel at
@@ -16,14 +15,9 @@ object DiagPplGate {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val cores = if (args.length > 1) args(1) else "16"
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(cores.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.register(spark, sfDir)
-    graft.functions.GraftFunctions.register(spark)
     val curate = graft.operators.Dedup.queries("pipeline_curate")(spark, sfDir)
     println(s"[diag-ppl] pipeline_curate rows = ${curate.count()}")
     val ppl = graft.operators.TextAnalysis.queries("text_perplexity")(spark, sfDir)

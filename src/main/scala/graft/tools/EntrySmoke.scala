@@ -4,7 +4,7 @@ package graft.tools
   * sf0.001 must return rows > 0. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = ToolSession.local()
+    val spark = graft.Session.local()
     val n = graft.SparkEntry.entry(spark).count()
     println(s"[entry-smoke] rows=$n")
     spark.stop()

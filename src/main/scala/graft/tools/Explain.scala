@@ -12,7 +12,7 @@ object Explain {
     // SPARK_GRAFT_CPUS lets a plan audit reproduce the bench session's
     // width-dependent nodes (the r19 session-derived repartition hints)
     val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
-    val spark = ToolSession.local(cores)
+    val spark = graft.Session.local(cores)
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     // formatted plan first: pushdown detail (ReadSchema/PushedFilters)
     df.explain("formatted")

@@ -71,20 +71,14 @@ object GraftCli {
       case _ => sys.error("exactly one of -e <sql> / -f <file> required")
     }
 
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_CLI_MASTER", "local[4]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-cli-wh").toString)
+    val builder = graft.Session.builder(4).appName("graft-cli")
       // the CLI implements Hive 1.2's VariableSubstitution itself (the
       // namespaces and unresolved-verbatim contract above); Spark's own
       // parser-level ${...} substitution would run SECOND and swallow
       // deliberately-unresolved references, so it is off by default
       // (a --hiveconf can still re-enable it explicitly)
       .config("spark.sql.variable.substitute", "false")
+    sys.env.get("SPARK_GRAFT_CLI_MASTER").foreach(builder.master)
     // --hiveconf properties apply to the session config, exactly as
     // CliDriver folds them into the HiveConf (spark.* and SQL confs
     // both land; hive.-namespace toggles we honor are read from the
@@ -92,7 +86,6 @@ object GraftCli {
     hiveconf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     sf.foreach(dir => graft.Tables.register(spark, dir))
 
     val substituteOn = hiveconf.getOrElse("hive.variable.substitute",

@@ -27,16 +27,10 @@ object MetastoreLifecycle {
   def main(args: Array[String]): Unit = {
     val Array(phase, baseDir) = args.take(2)
     System.setProperty("derby.stream.error.file", s"$baseDir/derby.log")
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.Session.builder(2, s"$baseDir/warehouse")
       .appName(s"graft-metastore-$phase")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$baseDir/warehouse")
       .config("spark.hadoop.javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$baseDir/metastore_db;create=true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.cbo.enabled", "true")
       .enableHiveSupport()
       .getOrCreate()

@@ -9,7 +9,7 @@ import graft.SparkEntry
 object RunSome {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2)
-    val spark = ToolSession.local()
+    val spark = graft.Session.local()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val t0 = System.nanoTime()

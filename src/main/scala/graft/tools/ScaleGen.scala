@@ -92,14 +92,8 @@ object ScaleGen {
     writeMarker(complete = false)
     val preExisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val cpus = Runtime.getRuntime.availableProcessors.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(Runtime.getRuntime.availableProcessors)
+      .appName("graft-scalegen").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(t: String)(f: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Unit = {

@@ -5,7 +5,7 @@ package graft.tools
   * this Spark build parse WITH RECURSIVE?) without a REPL. */
 object SqlProbe {
   def main(args: Array[String]): Unit = {
-    val spark = ToolSession.local()
+    val spark = graft.Session.local()
     try spark.sql(args(0)).show(50, truncate = false)
     catch { case e: Throwable => println("SQL FAIL: " + e.toString.take(400)) }
     spark.stop()

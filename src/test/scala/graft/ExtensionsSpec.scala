@@ -1,25 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.functions.GraftFunctions
 
 /** GraftExtensions wiring: a session built with .withExtensions resolves
   * every graft function from SQL with no manual registration. The
-  * existing SparkContext is reused (builder only applies extensions to a
-  * NEW SparkSession, so active/default must be cleared first). */
+  * existing SparkContext is reused (LocalSpark.withFreshSession). */
 class ExtensionsSpec extends AnyFunSuite {
 
   test("withExtensions session resolves graft functions from SQL") {
-    val base = LocalSpark.spark // shared context
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      assert(s ne base, "expected a fresh session carrying the extensions")
+    LocalSpark.withFreshSession(_.withExtensions(new GraftExtensions)) { s =>
       val r = s.sql("""
         SELECT COSINE_SIM(ARRAY(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
                           ARRAY(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
@@ -32,23 +22,24 @@ class ExtensionsSpec extends AnyFunSuite {
       val d = s.sql("DESCRIBE FUNCTION cosine_sim").collect()
         .map(_.getString(0)).mkString("\n")
       assert(d.contains("cosine_sim"), d)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("withExtensions session resolves every GraftFunctions.builders name, unregistered") {
+    LocalSpark.withFreshSession(_.withExtensions(new GraftExtensions)) { s =>
+      val names = GraftFunctions.builders.keys.toSeq.sorted
+      val missing = names.filterNot(n => s.catalog.functionExists(n))
+      assert(missing.isEmpty, s"not injected: ${missing.mkString(", ")}")
+      names.foreach { n =>
+        val d = s.sql(s"DESCRIBE FUNCTION $n").collect().map(_.getString(0))
+        assert(d.contains(s"Function: $n"), d.mkString("\n"))
+      }
     }
   }
 
   test("AnswerFromStats: COUNT/MIN/MAX over an ANALYZEd table do a metadata-only scan") {
-    val base = LocalSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.graft.answerFromStats", "true")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
+    LocalSpark.withFreshSession(_.config("spark.graft.answerFromStats", "true")
+        .withExtensions(new GraftExtensions)) { s =>
       s.sql("CREATE DATABASE IF NOT EXISTS graft_db")
       s.sql("DROP TABLE IF EXISTS graft_db.stats_t")
       Tables.register(s, LocalSpark.sf)
@@ -96,9 +87,6 @@ class ExtensionsSpec extends AnyFunSuite {
       val after = s.sql("SELECT COUNT(*) AS n FROM graft_db.stats_t")
       assert(after.collect()(0).getLong(0) == expectN + 5,
         "count after append must come from data, not stale stats")
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
     }
   }
 
